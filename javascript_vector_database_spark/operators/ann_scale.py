@@ -32,6 +32,11 @@ from javascript_vector_database_spark.functions.vector import (
 from javascript_vector_database_spark.operators.knn import _py_euclid, _qvec_lit
 from javascript_vector_database_spark.pivots import TOP_K, make_pivots
 
+
+class EmptyCorpusError(ValueError):
+    """A search needs at least one corpus row and got none."""
+
+
 IVF_K = 16  # fixed centroid count, independent of table size
 N_PROBE = 2
 LSH_SEED = 7
@@ -769,12 +774,11 @@ def ivf_radius_search(
 
 
 def ivf_radius_narrow_table(
-    assigned_or_emb: DataFrame,
+    emb: DataFrame,
     query_vecs: list[tuple[int, list[float]]],
     cents: list[tuple[int, list[float]]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    assigned: bool = False,
 ) -> DataFrame:
     """ONE scan that derives every number a radius query needs from the
     wide corpus: per row the ivf cell, the distance to its own centroid
@@ -785,38 +789,16 @@ def ivf_radius_narrow_table(
     vector column once per consumer (guide §1.2/§2.3: the registered
     radius row previously paid the 384-element fold 3·K+2 times per
     row across its sequential passes; this pays K+|Q| once).
-
-    ``assigned=True`` means the input already carries ``ivf_cell`` (the
-    stored ``partitionBy(ivf_cell)`` layout) and only the cdist
-    when-cascade (one fold per row) plus the query distances are
-    computed.  Output: (id, ivf_cell, cdist, __qd<i> per query)."""
-    from javascript_vector_database_spark.functions.vector import (
-        euclidean_distance,
-    )
-
+    Output: (id, ivf_cell, cdist, __qd<i> per query)."""
     qd_cols = [
         F.round(
             euclidean_distance(F.col(vec_col), _qvec_lit(qv)), 6
         ).alias(f"__qd{i}")
         for i, (_qid, qv) in enumerate(query_vecs)
     ]
-    if assigned:
-        cent_map = {int(cid): cemb for cid, cemb in cents}
-        chain = None
-        for cid, cemb in cent_map.items():
-            expr = euclidean_distance(F.col(vec_col), _qvec_lit(cemb))
-            chain = (
-                F.when(F.col("ivf_cell") == cid, expr)
-                if chain is None
-                else chain.when(F.col("ivf_cell") == cid, expr)
-            )
-        narrow = assigned_or_emb.select(
-            F.col(id_col), F.col("ivf_cell"), chain.alias("cdist"), *qd_cols
-        )
-    else:
-        narrow = ivf_assign_dist(
-            assigned_or_emb, id_col, vec_col, cents=cents
-        ).select(F.col(id_col), "ivf_cell", "cdist", *qd_cols)
+    narrow = ivf_assign_dist(emb, id_col, vec_col, cents=cents).select(
+        F.col(id_col), "ivf_cell", "cdist", *qd_cols
+    )
     return narrow.localCheckpoint(eager=True)
 
 
@@ -825,13 +807,16 @@ def radius_from_narrow(
 ) -> float:
     """The data-derived radius (nn-th exact-NN rounded distance) off the
     narrow table — the same value _nn_radius derives with a full corpus
-    fold, for a bounded top-nn over one double column."""
+    fold, for a bounded top-nn over one double column.  Raises
+    ``EmptyCorpusError`` when the table has no rows to derive it from."""
     rows = (
         narrow.select(qd_col, id_col)
         .orderBy(F.col(qd_col).asc(), F.col(id_col).asc())
         .limit(nn)
         .collect()
     )
+    if not rows:
+        raise EmptyCorpusError(f"no rows to derive a radius from in {qd_col}")
     return max(float(r[qd_col]) for r in rows)
 
 
@@ -888,7 +873,14 @@ def ivf_radius_batch_fused(
     bounds, and the final emission explodes the per-query rounded
     distances already sitting in the narrow table — the corpus is
     never re-folded per query.  Output: (query_id, id, distance),
-    exactly ivf_radius_batch's rows."""
+    exactly ivf_radius_batch's rows; an empty query set gives an empty
+    frame of those columns."""
+    if not queries:
+        return emb.select(
+            F.lit(0).cast("long").alias("query_id"),
+            F.col(id_col),
+            F.lit(0.0).alias("distance"),
+        ).limit(0)
     narrow = ivf_radius_narrow_table(emb, queries, cents, id_col, vec_col)
     radii = cell_radii_from_narrow(narrow)
     sel = None

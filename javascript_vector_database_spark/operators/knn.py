@@ -8,16 +8,21 @@ Three strategies, mirroring reference src/search.ts:
 
 Spark-first design notes (scale: 100 TB, 1000 executors):
 
+* Each query is ONE ``spark.sql`` statement (``_knn_sql``) over tables
+  passed in as DataFrames: queries are interactive, and a chain of ~55
+  DataFrame calls cost ~1,180 py4j round trips and a JVM analysis per
+  call, where a statement is parsed and analyzed once.
 * The query vector is a *parameter*: inlined as a literal array, so every
-  distance is a pure Column expression — no join, no shuffle for the scan
-  phase.  ``orderBy(distance).limit(k)`` compiles to
-  ``TakeOrderedAndProject`` — per-partition partial top-k, then a k-row
-  merge on the driver.  No full sort, no full shuffle, ever.
-* The reference issues 5 separate index-range queries and union-dedups
-  (src/search.ts:23-40).  On a columnar store one scan with an OR of the 5
-  range predicates is the same candidate set with 1/5 the reads; min-max
-  row-group skipping still applies per conjunct.  We keep the single-pass
-  plan and cite the equivalence.
+  distance is a pure expression (``euclidean_distance_sql``, the same
+  left-to-right fold as ``euclidean_distance``: bit-identical answers).
+  ``ORDER BY distance LIMIT k`` compiles to ``TakeOrderedAndProject`` —
+  per-partition partial top-k, then a k-row merge on the driver.  No
+  full sort, no full shuffle, ever.
+* Range and neighbourhood share one template: candidate ids per pivot,
+  a left-semi join back to the rows (the reference's Set union of its
+  per-pivot probes, src/search.ts:23-40), the exact top-k.
+  Candidates are chosen from ids and pivot distances only; the vector
+  column is read once, by the re-rank's scan.
 * Pivot-distance index columns are precomputed at write time
   (``build_pivot_index``), exactly like the reference computes idx0..idx4
   at pipeline time (src/database.ts:195-198).  At 100 TB these are plain
@@ -33,7 +38,9 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from javascript_vector_database_spark.functions.vector import (
+    double_sql,
     euclidean_distance,
+    euclidean_distance_sql,
     index_nr_to_string,
     lit_double_array,
 )
@@ -57,18 +64,130 @@ def _py_euclid(a: list[float], b: list[float]) -> float:
     return s**0.5
 
 
-def with_distance(
-    df: DataFrame,
+def _ident(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def pivot_bands(
     query_vec: list[float],
-    vec_col: str = "embedding",
-    out_col: str = "distance",
-    round_to: int | None = 6,
+    pivots: list[list[float]],
+    index_distance: float = INDEX_DISTANCE,
+) -> list[tuple[float, float]]:
+    """Each pivot's OPEN candidate band (lo, hi): with
+    d_i = dist(pivot_i, q), idx_i must lie in (d_i - d_i·w, d_i + d_i·w)
+    (src/search.ts:27-36)."""
+    ds = [_py_euclid(p, query_vec) for p in pivots]
+    return [(d - d * index_distance, d + d * index_distance) for d in ds]
+
+
+def _band_sql(
+    query_vec: list[float],
+    pivots: list[list[float]],
+    index_distance: float,
+    compat_strings: bool = False,
+) -> list[str]:
+    """Per pivot i its band as a SQL predicate on ``idx<i>``; with
+    ``compat_strings`` on ``idx<i>_str``, the bounds encoded the way the
+    reference encodes its keys."""
+    preds = []
+    for i, (lo, hi) in enumerate(pivot_bands(query_vec, pivots, index_distance)):
+        if compat_strings:
+            key = f"idx{i}_str"
+            lo_s, hi_s = f"'{_py_index_string(lo)}'", f"'{_py_index_string(hi)}'"
+        else:
+            key, lo_s, hi_s = f"idx{i}", double_sql(lo), double_sql(hi)
+        preds.append(f"{key} > {lo_s} AND {key} < {hi_s}")
+    return preds
+
+
+def _range_cands(
+    query_vec: list[float],
+    pivots: list[list[float]],
+    index_distance: float,
+    id_col: str,
+    stored: bool,
+    compat_strings: bool = False,
+) -> str:
+    """Candidate ids of the range probe: on one table ``{rows}`` one scan
+    with the OR of the bands; on the stored index each band scans its
+    own sorted table ``{idx<i>}``, where it pushes to parquet."""
+    i_ = _ident(id_col)
+    preds = _band_sql(query_vec, pivots, index_distance, compat_strings)
+    if stored:
+        return " UNION ALL ".join(
+            f"SELECT {i_} FROM {{idx{i}}} WHERE {p}" for i, p in enumerate(preds)
+        )
+    return f"SELECT {i_} FROM {{rows}} WHERE " + " OR ".join(f"({p})" for p in preds)
+
+
+def _side_cands(
+    query_vec: list[float],
+    pivots: list[list[float]],
+    docs_per_side: int,
+    id_col: str,
+    stored: bool,
+) -> str:
+    """Candidate ids of the 2·n_pivots neighbourhood sides (per pivot the
+    ``docs_per_side`` nearest entries strictly below d_i, idx desc, and
+    strictly above, idx asc; id asc breaks ties — src/search.ts:63-82).
+    Rows carry (side, key), key -idx_i below (exact negation) or idx_i
+    above, ranked by ONE per-side row_number filter: a two-phase
+    WindowGroupLimit.  One table ``{rows}`` is one scan stacking each
+    row's pairs; on the stored index each side is a predicate pushed to
+    the scan of its sorted table ``{idx<i>}``."""
+    i_ = _ident(id_col)
+    sides, stack = [], []
+    for i, p in enumerate(pivots):
+        d = double_sql(_py_euclid(p, query_vec))
+        for side, op, key in ((2 * i, "<", f"-idx{i}"), (2 * i + 1, ">", f"idx{i}")):
+            cond = f"idx{i} {op} {d}"
+            sides.append(f"SELECT {i_}, {side}, {key} FROM {{idx{i}}} WHERE {cond}")
+            stack.append(f"{side}, CASE WHEN {cond} THEN {key} END")
+    if not stored:
+        sides = [
+            f"SELECT {i_}, s.side, s.key FROM {{rows}} LATERAL VIEW "
+            f"stack({len(stack)}, {', '.join(stack)}) s AS side, key "
+            "WHERE s.key IS NOT NULL"
+        ]
+    return (
+        f"SELECT {i_} FROM (SELECT {i_}, row_number() OVER (PARTITION BY "
+        f"side ORDER BY key ASC, {i_} ASC) AS rn FROM "
+        f"({' UNION ALL '.join(sides)}) AS t({i_}, side, key)) "
+        f"WHERE rn <= {int(docs_per_side)}"
+    )
+
+
+def _knn_sql(
+    rows: DataFrame,
+    query_vec: list[float],
+    k: int,
+    id_col: str,
+    vec_col: str,
+    cands: str | None = None,
+    bounded: bool = False,
+    **tables: DataFrame,
 ) -> DataFrame:
-    """Add the euclidean distance to the (literal) query vector."""
-    d = euclidean_distance(F.col(vec_col), _qvec_lit(query_vec))
-    if round_to is not None:
-        d = F.round(d, round_to)
-    return df.withColumn(out_col, d)
+    """ONE ``spark.sql`` statement: the exact top-k of ``rows`` by
+    (rounded distance to the inlined query vector, id), after ``cands``
+    (SQL over ``{rows}`` and ``tables``) cuts the rows to its ids by a
+    left-semi join, which ignores duplicate ids: the reference's Set
+    union.  Only a ``bounded`` candidate count is hinted to broadcast: a
+    range band can hold much of the corpus, so AQE sizes that join.
+    Output: (id, distance)."""
+    i_ = _ident(id_col)
+    dist = euclidean_distance_sql(f"r.{_ident(vec_col)}", query_vec)
+    head, hint, join = "", "", ""
+    if cands is not None:
+        head = f"WITH cands AS ({cands}) "
+        hint = "/*+ BROADCAST(c) */ " if bounded else ""
+        join = f" LEFT SEMI JOIN cands c ON r.{i_} = c.{i_}"
+    return rows.sparkSession.sql(
+        f"{head}SELECT {hint}r.{i_}, round({dist}, 6) AS distance "
+        f"FROM {{rows}} r{join} "
+        f"ORDER BY distance ASC, {i_} ASC LIMIT {int(k)}",
+        rows=rows,
+        **tables,
+    )
 
 
 def exact_knn(
@@ -84,12 +203,7 @@ def exact_knn(
 
     Plan: one scan -> TakeOrderedAndProject(k).  Returns (id, distance).
     """
-    return (
-        with_distance(df, query_vec, vec_col)
-        .select(id_col, "distance")
-        .orderBy(F.col("distance").asc(), F.col(id_col).asc())
-        .limit(k)
-    )
+    return _knn_sql(df, query_vec, k, id_col, vec_col)
 
 
 def build_pivot_index(
@@ -103,12 +217,19 @@ def build_pivot_index(
     10-char compat string encoding (src/database.ts:223-225) is opt-in for
     fidelity tests (see SURVEY.md §1.3 for why strings mis-sort).
     """
-    out = df
-    for i, p in enumerate(pivots):
-        d = euclidean_distance(F.col(vec_col), _qvec_lit(p))
-        out = out.withColumn(f"idx{i}", d)
-        if compat_strings:
-            out = out.withColumn(f"idx{i}_str", index_nr_to_string(F.col(f"idx{i}")))
+    out = df.withColumns(
+        {
+            f"idx{i}": F.expr(euclidean_distance_sql(_ident(vec_col), p))
+            for i, p in enumerate(pivots)
+        }
+    )
+    if compat_strings:
+        out = out.withColumns(
+            {
+                f"idx{i}_str": index_nr_to_string(F.col(f"idx{i}"))
+                for i in range(len(pivots))
+            }
+        )
     return out
 
 
@@ -127,28 +248,39 @@ def ann_index_range(
     For each pivot i: d_i = dist(pivot_i, q); candidates have
     idx_i in the OPEN interval (d_i - d_i*0.003, d_i + d_i*0.003).
     The reference runs 5 index queries and union-dedups into a Set
-    (src/search.ts:21-40); a single scan with the OR of the 5 sargable
-    range predicates yields the identical candidate set (dedup implicit)
-    and touches the storage once.  Candidates are exactly re-ranked and
-    the top-k returned (src/search.ts:42-53).
+    (src/search.ts:21-40); one scan of the ids and pivot distances with
+    the OR of the 5 range predicates yields the same candidates, then
+    the exact re-rank and top-k (src/search.ts:42-53).
 
     With ``precomputed=True`` the df already carries idx0..idxN columns
     (write-time index, the scale path — predicates push to parquet).
     """
-    n = len(pivots)
-    src = df if precomputed else build_pivot_index(df, pivots, vec_col)
-    cond = None
-    for i, p in enumerate(pivots[:n]):
-        d_i = _py_euclid(p, query_vec)
-        lo, hi = d_i - d_i * index_distance, d_i + d_i * index_distance
-        c = (F.col(f"idx{i}") > F.lit(lo)) & (F.col(f"idx{i}") < F.lit(hi))
-        cond = c if cond is None else (cond | c)
-    return (
-        with_distance(src.where(cond), query_vec, vec_col)
-        .select(id_col, "distance")
-        .orderBy(F.col("distance").asc(), F.col(id_col).asc())
-        .limit(k)
-    )
+    rows = df if precomputed else build_pivot_index(df, pivots, vec_col)
+    cands = _range_cands(query_vec, pivots, index_distance, id_col, stored=False)
+    return _knn_sql(rows, query_vec, k, id_col, vec_col, cands)
+
+
+def ann_index_similarity(
+    df: DataFrame,
+    query_vec: list[float],
+    pivots: list[list[float]],
+    k: int = TOP_K,
+    docs_per_side: int = DOCS_PER_INDEX_SIDE,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    precomputed: bool = False,
+) -> DataFrame:
+    """Pivot-neighborhood ANN (reference src/search.ts:56-109).
+
+    Per pivot i, take the ``docs_per_side`` nearest index entries strictly
+    below d_i (idx desc) and strictly above d_i (idx asc) — the reference's
+    two Mango queries with $lt / $gt + limit (src/search.ts:63-82) — then
+    union-dedup, exact re-rank, top-k.  The sides are ranked over ONE
+    scan of the ids and pivot distances (``_side_cands``).
+    """
+    rows = df if precomputed else build_pivot_index(df, pivots, vec_col)
+    cands = _side_cands(query_vec, pivots, docs_per_side, id_col, stored=False)
+    return _knn_sql(rows, query_vec, k, id_col, vec_col, cands, bounded=True)
 
 
 def write_pivot_index_tables(
@@ -210,10 +342,15 @@ def write_pivot_index_tables(
                 .parquet(os.path.join(base_dir, f"idx{i}"))
             )
 
+        # the base table feeds the exact scan and every doc read: spread
+        # a source of fewer partitions (one input file is one partition)
+        # over n_files files so those scans use every core
+        base = src.select(id_col, vec_col)
+        if src.rdd.getNumPartitions() < n_files:
+            base = base.repartition(n_files)
+
         def _write_base() -> None:
-            src.select(id_col, vec_col).write.mode("overwrite").parquet(
-                os.path.join(base_dir, "base")
-            )
+            base.write.mode("overwrite").parquet(os.path.join(base_dir, "base"))
 
         with ThreadPoolExecutor(max_workers=3) as pool:
             futs = [pool.submit(_write_idx, i) for i in range(len(pivots))]
@@ -342,38 +479,14 @@ def ann_index_range_stored(
 ) -> DataFrame:
     """Range-ANN served from the STORED pivot index tables (see
     write_pivot_index_tables) — the reference's actual query plan, five
-    index range scans + doc reads (src/search.ts:19-54), rather than the
-    recompute-the-index-per-query shape the faithful ``knn_ann_range``
-    row keeps for oracle fidelity.
-
-    Per pivot i the band predicate ``idx_i IN (d_i ± d_i·w)`` hits a
-    table sorted by idx_i, so it pushes to parquet and row groups whose
-    [min,max] miss the band are never decoded (the measured fraction is
-    the ``pivot_idx_prunable_frac`` bench extra).  Candidate ids
-    union-dedup across the five scans — the reference's Set union
-    (src/search.ts:38-40) — then ONE semi-join back to the base table
-    re-ranks exactly and takes top-k.  The candidate set is band-bounded
-    (tiny by construction: ±0.003 of each pivot distance), so AQE
-    broadcasts the semi-join; the base side stays partition-local, no
-    corpus shuffle."""
+    index range scans + doc reads (src/search.ts:19-54).  Per pivot i the
+    band predicate hits a table sorted by idx_i, so it pushes to parquet
+    and row groups whose [min,max] miss the band are never decoded (the
+    ``pivot_idx_prunable_frac`` bench extra); the candidate ids feed one
+    semi-join doc-read re-rank."""
     tables = tables or open_pivot_index_tables(spark, base_dir, len(pivots))
-    cands = None
-    for i, p in enumerate(pivots):
-        d_i = _py_euclid(p, query_vec)
-        lo, hi = d_i - d_i * index_distance, d_i + d_i * index_distance
-        c = tables[f"idx{i}"].where(
-            (F.col(f"idx{i}") > F.lit(lo)) & (F.col(f"idx{i}") < F.lit(hi))
-        ).select(id_col)
-        cands = c if cands is None else cands.unionByName(c)
-    # no dropDuplicates: left_semi already ignores duplicate right-side
-    # keys — the reference's Set union happens implicitly in the join
-    hits = tables["base"].join(cands, id_col, "left_semi")
-    return (
-        with_distance(hits, query_vec, vec_col)
-        .select(id_col, "distance")
-        .orderBy(F.col("distance").asc(), F.col(id_col).asc())
-        .limit(k)
-    )
+    cands = _range_cands(query_vec, pivots, index_distance, id_col, stored=True)
+    return _knn_sql(tables["base"], query_vec, k, id_col, vec_col, cands, **tables)
 
 
 def ann_index_range_compat_stored(
@@ -396,27 +509,13 @@ def ann_index_range_compat_stored(
     across digit-count regime boundaries exactly like
     ``ann_index_range_compat`` (SURVEY §1.3), and hash-matches that
     row's oracle.  Parquet keeps binary min/max footer stats for
-    strings, so the string band prunes row groups the same way the
-    double tables do; candidates union-dedup via the shared left_semi
-    doc-read re-rank, no corpus shuffle."""
+    strings, so the string band prunes row groups like the double
+    tables do."""
     tables = tables or open_pivot_index_tables(spark, base_dir, len(pivots))
-    cands = None
-    for i, p in enumerate(pivots):
-        d_i = _py_euclid(p, query_vec)
-        lo = _py_index_string(d_i - d_i * index_distance)
-        hi = _py_index_string(d_i + d_i * index_distance)
-        c = tables[f"idx{i}"].where(
-            (F.col(f"idx{i}_str") > F.lit(lo))
-            & (F.col(f"idx{i}_str") < F.lit(hi))
-        ).select(id_col)
-        cands = c if cands is None else cands.unionByName(c)
-    hits = tables["base"].join(cands, id_col, "left_semi")
-    return (
-        with_distance(hits, query_vec, vec_col)
-        .select(id_col, "distance")
-        .orderBy(F.col("distance").asc(), F.col(id_col).asc())
-        .limit(k)
+    cands = _range_cands(
+        query_vec, pivots, index_distance, id_col, stored=True, compat_strings=True
     )
+    return _knn_sql(tables["base"], query_vec, k, id_col, vec_col, cands, **tables)
 
 
 def ann_index_range_stored_batch(
@@ -452,21 +551,14 @@ def ann_index_range_stored_batch(
     from pyspark.sql.window import Window
 
     tables = tables or open_pivot_index_tables(spark, base_dir, len(pivots))
-    cands = None
-    for qid, qv in queries:
-        for i, p in enumerate(pivots):
-            d_i = _py_euclid(p, qv)
-            lo, hi = d_i - d_i * index_distance, d_i + d_i * index_distance
-            c = (
-                tables[f"idx{i}"]
-                .where(
-                    (F.col(f"idx{i}") > F.lit(lo))
-                    & (F.col(f"idx{i}") < F.lit(hi))
-                )
-                .select(F.lit(qid).alias("query_id"), id_col)
-            )
-            cands = c if cands is None else cands.unionByName(c)
-    cands = cands.dropDuplicates(["query_id", id_col])
+    cands = spark.sql(
+        " UNION ALL ".join(
+            f"SELECT DISTINCT {int(qid)} AS query_id, {_ident(id_col)} FROM "
+            f"({_range_cands(qv, pivots, index_distance, id_col, stored=True)})"
+            for qid, qv in queries
+        ),
+        **tables,
+    )
     qdf = spark.createDataFrame(
         [(int(qid), [float(x) for x in qv]) for qid, qv in queries],
         schema="query_id int, qvec array<double>",
@@ -510,95 +602,15 @@ def ann_index_similarity_stored(
     (src/search.ts:56-109: per pivot, two Mango queries with $lt / $gt
     + limit over the sorted idxN index).
 
-    Per pivot each side is a sargable one-column predicate + top-N over
-    a table SORTED by that column: the predicate pushes to parquet, and
-    TakeOrderedAndProject takes per-partition partial top-Ns — on the
-    range layout only the files straddling d_i contribute candidates,
-    the rest are bounded by their min/max.  2·n_pivots skinny mini-scans
-    + one semi-join doc-read re-rank; the candidate set is
-    ≤ 2·n_pivots·docs_per_side rows by construction, so the join
-    broadcasts.  Hash-matches the recomputed ``ann_index_similarity``
-    (same bounds, same dedup, same re-rank)."""
+    Per pivot each side is a sargable one-column predicate over a table
+    SORTED by that column, pushed to parquet; the sides' per-partition
+    partial top-Ns feed one broadcast semi-join doc-read re-rank of
+    ≤ 2·n_pivots·docs_per_side ids.  Hash-matches the recomputed
+    ``ann_index_similarity`` (same bounds, same dedup, same re-rank)."""
     tables = tables or open_pivot_index_tables(spark, base_dir, len(pivots))
-    sides: list[DataFrame] = []
-    for i, p in enumerate(pivots):
-        d_i = _py_euclid(p, query_vec)
-        idx = tables[f"idx{i}"]
-        below = (
-            idx.where(F.col(f"idx{i}") < F.lit(d_i))
-            .orderBy(F.col(f"idx{i}").desc(), F.col(id_col).asc())
-            .limit(docs_per_side)
-            .select(id_col)
-        )
-        above = (
-            idx.where(F.col(f"idx{i}") > F.lit(d_i))
-            .orderBy(F.col(f"idx{i}").asc(), F.col(id_col).asc())
-            .limit(docs_per_side)
-            .select(id_col)
-        )
-        sides.extend([below, above])
-    cands = sides[0]
-    for s in sides[1:]:
-        cands = cands.unionByName(s)
-    # no dropDuplicates: left_semi already ignores duplicate right-side
-    # keys (the Set-union dedup is implicit in the join semantics)
-    hits = tables["base"].join(F.broadcast(cands), id_col, "left_semi")
-    return (
-        with_distance(hits, query_vec, vec_col)
-        .select(id_col, "distance")
-        .orderBy(F.col("distance").asc(), F.col(id_col).asc())
-        .limit(k)
-    )
-
-
-def ann_index_similarity(
-    df: DataFrame,
-    query_vec: list[float],
-    pivots: list[list[float]],
-    k: int = TOP_K,
-    docs_per_side: int = DOCS_PER_INDEX_SIDE,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    precomputed: bool = False,
-) -> DataFrame:
-    """Pivot-neighborhood ANN (reference src/search.ts:56-109).
-
-    Per pivot i, take the ``docs_per_side`` nearest index entries strictly
-    below d_i (idx desc) and strictly above d_i (idx asc) — the reference's
-    two Mango queries with $lt / $gt + limit (src/search.ts:63-82) — then
-    union-dedup, exact re-rank, top-k.
-
-    Each side compiles to TakeOrderedAndProject(docs_per_side): partial
-    top-k per partition, no full shuffle.  2·n_pivots bounded mini-scans
-    of a single (cached or columnar) source.
-    """
-    src = df if precomputed else build_pivot_index(df, pivots, vec_col)
-    keep = [id_col, vec_col]
-    sides: list[DataFrame] = []
-    for i, p in enumerate(pivots):
-        d_i = _py_euclid(p, query_vec)
-        below = (
-            src.where(F.col(f"idx{i}") < F.lit(d_i))
-            .orderBy(F.col(f"idx{i}").desc(), F.col(id_col).asc())
-            .limit(docs_per_side)
-            .select(*keep)
-        )
-        above = (
-            src.where(F.col(f"idx{i}") > F.lit(d_i))
-            .orderBy(F.col(f"idx{i}").asc(), F.col(id_col).asc())
-            .limit(docs_per_side)
-            .select(*keep)
-        )
-        sides.extend([below, above])
-    cands = sides[0]
-    for s in sides[1:]:
-        cands = cands.unionByName(s)
-    cands = cands.dropDuplicates([id_col])
-    return (
-        with_distance(cands, query_vec, vec_col)
-        .select(id_col, "distance")
-        .orderBy(F.col("distance").asc(), F.col(id_col).asc())
-        .limit(k)
+    cands = _side_cands(query_vec, pivots, docs_per_side, id_col, stored=True)
+    return _knn_sql(
+        tables["base"], query_vec, k, id_col, vec_col, cands, bounded=True, **tables
     )
 
 
@@ -665,22 +677,13 @@ def ann_index_range_compat(
     double-key mode (``ann_index_range``, the consciously-fixed scale
     path).  tests/test_knn.py::test_compat_string_range_divergence pins
     the divergence down."""
-    src = df if precomputed else build_pivot_index(
+    rows = df if precomputed else build_pivot_index(
         df, pivots, vec_col, compat_strings=True
     )
-    cond = None
-    for i, p in enumerate(pivots):
-        d_i = _py_euclid(p, query_vec)
-        lo = _py_index_string(d_i - d_i * index_distance)
-        hi = _py_index_string(d_i + d_i * index_distance)
-        c = (F.col(f"idx{i}_str") > F.lit(lo)) & (F.col(f"idx{i}_str") < F.lit(hi))
-        cond = c if cond is None else (cond | c)
-    return (
-        with_distance(src.where(cond), query_vec, vec_col)
-        .select(id_col, "distance")
-        .orderBy(F.col("distance").asc(), F.col(id_col).asc())
-        .limit(k)
+    cands = _range_cands(
+        query_vec, pivots, index_distance, id_col, stored=False, compat_strings=True
     )
+    return _knn_sql(rows, query_vec, k, id_col, vec_col, cands)
 
 
 def knn_batch(
@@ -741,13 +744,8 @@ def candidate_count(
     """docReads analog: rows touched by the range-ANN candidate predicate
     (reference tracks docReads per search, src/search.ts:38,52)."""
     src = df if precomputed else build_pivot_index(df, pivots, vec_col)
-    cond = None
-    for i, p in enumerate(pivots):
-        d_i = _py_euclid(p, query_vec)
-        lo, hi = d_i - d_i * index_distance, d_i + d_i * index_distance
-        c = (F.col(f"idx{i}") > F.lit(lo)) & (F.col(f"idx{i}") < F.lit(hi))
-        cond = c if cond is None else (cond | c)
-    return src.where(cond).count()
+    preds = _band_sql(query_vec, pivots, index_distance)
+    return src.where(" OR ".join(f"({p})" for p in preds)).count()
 
 
 # ---------------------------------------------------------------------------

@@ -24,7 +24,10 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from javascript_vector_database_spark.functions.vector import index_nr_to_string
+from javascript_vector_database_spark.functions.vector import (
+    euclidean_distance,
+    index_nr_to_string,
+)
 from javascript_vector_database_spark.operators import knn
 from javascript_vector_database_spark.registry import QVEC_ID, register, used_pivots
 from javascript_vector_database_spark.registry.vector_search import (
@@ -338,7 +341,6 @@ def stream_reactive_topk_384(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from javascript_vector_database_spark.operators.knn import with_distance
     from javascript_vector_database_spark.pivots import TOP_K
     from javascript_vector_database_spark.registry.feed_state import (
         _stream_feed,
@@ -348,9 +350,11 @@ def stream_reactive_topk_384(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     qv = _fixture_qvec(spark)
-    docs = with_distance(_fixture(spark), qv).select(
+    docs = _fixture(spark).select(
         "vec_id",
-        "distance",
+        F.round(euclidean_distance("embedding", knn._qvec_lit(qv)), 6).alias(
+            "distance"
+        ),
         F.lit(False).alias("_deleted"),
         F.col("vec_id").cast("double").alias("_lwt"),
     )

@@ -339,3 +339,22 @@ def test_ivf_pandas_cells_match_expression_fold(spark):
         ).collect()
     }
     assert fold == kern and len(fold) > 0
+
+
+def test_ivf_radius_batch_fused_empty_query_set(spark, sf_smoke):
+    """No queries: an empty (query_id, id, distance) frame, not None."""
+    emb = load_table(spark, sf_smoke, "embeddings")
+    cents = ann_scale.collect_centroids(emb)
+    out = ann_scale.ivf_radius_batch_fused(emb, [], cents, 20)
+    assert out.columns == ["query_id", "vec_id", "distance"]
+    assert dict(out.dtypes)["query_id"] == "bigint"
+    assert out.collect() == []
+
+
+def test_radius_from_narrow_empty_table_is_named_error(spark, sf_smoke):
+    """An empty corpus raises EmptyCorpusError, not a bare max() error."""
+    emb = load_table(spark, sf_smoke, "embeddings")
+    cents = ann_scale.collect_centroids(emb)
+    narrow = ann_scale.ivf_radius_narrow_table(emb.limit(0), [(0, cents[0][1])], cents)
+    with pytest.raises(ann_scale.EmptyCorpusError):
+        ann_scale.radius_from_narrow(narrow, "__qd0", 20)

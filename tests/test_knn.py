@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from javascript_vector_database_spark import registry
@@ -208,3 +209,118 @@ def test_lit_double_array_bit_identical(spark):
         struct.pack("d", a) == struct.pack("d", b) for a, b in zip(old, new)
     )
     assert len(old) == len(new) == len(vals)
+
+
+# -- degenerate inputs: the five served strategies against a Python model --
+
+_DIM = 4
+_PIVOTS = make_pivots(_DIM)[:3]
+
+
+def _py_dist(a, b) -> float:
+    return knn._py_euclid(a, b)
+
+
+def _model(rows, q, strategy, k, index_distance, docs_per_side):
+    """Python model of each strategy's answer over (id, vec) rows: the
+    candidate ids, then the exact top-k by (distance, id)."""
+    idx = {i: [_py_dist(v, p) for p in _PIVOTS] for i, v in rows}
+    if strategy == "exact":
+        cands = set(idx)
+    elif strategy.startswith("range"):
+        bands = knn.pivot_bands(q, _PIVOTS, index_distance)
+        cands = {
+            i for i, ds in idx.items()
+            if any(lo < d < hi for d, (lo, hi) in zip(ds, bands))
+        }
+    else:
+        cands = set()
+        for n, p in enumerate(_PIVOTS):
+            d = _py_dist(p, q)
+            below = sorted((-ds[n], i) for i, ds in idx.items() if ds[n] < d)
+            above = sorted((ds[n], i) for i, ds in idx.items() if ds[n] > d)
+            cands |= {i for _, i in below[:docs_per_side] + above[:docs_per_side]}
+    vecs = dict(rows)
+    ranked = sorted((_py_dist(vecs[i], q), i) for i in cands)
+    return [(i, d) for d, i in ranked[:k]]
+
+
+def _run(spark, tmp_path, df, q, strategy, k, index_distance, docs_per_side, id_col):
+    if strategy == "exact":
+        return knn.exact_knn(df, q, k=k, id_col=id_col)
+    if strategy in ("range", "neigh"):
+        pre = knn.build_pivot_index(df, _PIVOTS)
+        if strategy == "range":
+            return knn.ann_index_range(
+                pre, q, _PIVOTS, k=k, index_distance=index_distance,
+                id_col=id_col, precomputed=True,
+            )
+        return knn.ann_index_similarity(
+            pre, q, _PIVOTS, k=k, docs_per_side=docs_per_side,
+            id_col=id_col, precomputed=True,
+        )
+    base = str(tmp_path / "pivot_index")
+    knn.write_pivot_index_tables(df, _PIVOTS, base, id_col=id_col)
+    if strategy == "range_stored":
+        return knn.ann_index_range_stored(
+            spark, base, q, _PIVOTS, k=k, index_distance=index_distance,
+            id_col=id_col,
+        )
+    return knn.ann_index_similarity_stored(
+        spark, base, q, _PIVOTS, k=k, docs_per_side=docs_per_side, id_col=id_col,
+    )
+
+
+_STRATEGIES = ["exact", "range", "neigh", "range_stored", "neigh_stored"]
+_ROWS = [
+    ("c00000", [0.0, 0.0, 0.0, 0.0]),
+    ("c00001", [1.0, 0.0, 0.0, 0.0]),
+    ("c00002", [0.0, 2.0, 0.0, 0.0]),
+    ("c00003", [0.0, 0.0, 3.0, 1.0]),
+    ("c00004", [1.0, 1.0, 1.0, 1.0]),
+    ("c00005", [1.0, 1.0, 1.0, 1.0]),  # a duplicate vector: every tie on the id
+]
+_CASES = {
+    # (rows, query, k, index_distance, docs_per_side)
+    "empty_table": ([], [0.5, 0.5, 0.5, 0.5], 10, 0.5, 2),
+    "k_above_rows": (_ROWS, [0.5, 0.5, 0.5, 0.5], 50, 0.5, 100),
+    # the query sits ON pivot 0: no row is strictly below d_0 = 0
+    "pivot_side_empty": (_ROWS, _PIVOTS[0], 3, 0.5, 2),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_CASES))
+@pytest.mark.parametrize("strategy", _STRATEGIES)
+def test_knn_degenerate_inputs(spark, tmp_path, strategy, case):
+    """Empty table, k above the row count, a pivot with no rows on one
+    side, with string ids as in the live table: each strategy returns
+    the model's (possibly empty or short) answer and never raises."""
+    rows, q, k, index_distance, docs_per_side = _CASES[case]
+    df = spark.createDataFrame(rows, "id string, embedding array<double>")
+    got = _run(
+        spark, tmp_path, df, q, strategy, k, index_distance, docs_per_side, "id"
+    ).collect()
+    want = _model(rows, q, strategy, k, index_distance, docs_per_side)
+    assert [r["id"] for r in got] == [i for i, _ in want]
+    assert [r["distance"] for r in got] == pytest.approx(
+        [d for _, d in want], abs=1e-6
+    )
+    assert len(got) <= min(k, len(rows))
+
+
+def test_write_pivot_index_spreads_one_partition_base(spark, tmp_path):
+    """A one-partition source is written as n_files base files, so the
+    exact scan and the doc reads run as several tasks; the rows are
+    unchanged."""
+    rows = [(i, [float(i % 7), float(i % 5), 1.0, float(i)]) for i in range(200)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    src = df.coalesce(1)
+    assert src.rdd.getNumPartitions() == 1
+    base = str(tmp_path / "pivot_index")
+    knn.write_pivot_index_tables(src, _PIVOTS, base, n_files=4)
+    back = spark.read.parquet(f"{base}/base")
+    sizes = back.rdd.glom().map(len).collect()
+    assert sum(1 for n in sizes if n > 0) > 1, sizes
+    assert sorted((r["vec_id"], list(r["embedding"])) for r in back.collect()) == sorted(
+        (i, v) for i, v in rows
+    )

@@ -23,11 +23,12 @@ def _optimized(df) -> str:
 
 
 def test_knn_exact_is_take_ordered(spark):
-    """Top-k must be TakeOrderedAndProject (per-partition heap + k-row
-    driver merge), never a global Sort + Limit."""
+    """Top-k must be ONE TakeOrderedAndProject (per-partition heap + k-row
+    driver merge) straight over the scan: never a global Sort + Limit,
+    and no Exchange of any kind."""
     plan = _plan(registry.queries()["knn_exact"](spark, SF))
-    assert "TakeOrderedAndProject" in plan
-    assert "Exchange rangepartitioning" not in plan
+    assert plan.count("TakeOrderedAndProject") == 1, plan
+    assert "Exchange" not in plan, plan
 
 
 def test_knn_batch_partial_group_limit(spark):
@@ -623,3 +624,51 @@ def test_ivf_radius_partitioned_probe_prunes(spark):
     assert "PartitionFilters: [" in plan
     seg = plan.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
     assert "ivf_cell" in seg and seg.strip()
+
+
+def _stored_index(spark, tmp_path):
+    from javascript_vector_database_spark.operators import knn
+    from javascript_vector_database_spark.registry import get_query_vec
+    from javascript_vector_database_spark.registry.vector_search import (
+        used_pivots,
+    )
+
+    emb = load_table(spark, SF, "embeddings")
+    qv = get_query_vec(spark, SF)
+    pivots = used_pivots(len(qv))
+    pre = str(tmp_path / "indexed")
+    knn.build_pivot_index(emb, pivots).write.parquet(pre)
+    base = str(tmp_path / "pivot_index")
+    knn.write_pivot_index_tables(emb, pivots, base)
+    return spark.read.parquet(pre), base, qv, pivots
+
+
+def test_ann_reranks_broadcast_left_semi(spark, tmp_path):
+    """Range and neighbourhood ANN, on one table and on the stored index,
+    re-rank through a broadcast left-semi join of the candidate ids back
+    to the rows — never a shuffled join or a cartesian product."""
+    from javascript_vector_database_spark.operators import knn
+
+    pre, base, qv, pivots = _stored_index(spark, tmp_path)
+    for df in (
+        knn.ann_index_range(pre, qv, pivots, precomputed=True),
+        knn.ann_index_similarity(pre, qv, pivots, precomputed=True),
+        knn.ann_index_range_stored(spark, base, qv, pivots),
+        knn.ann_index_similarity_stored(spark, base, qv, pivots),
+    ):
+        plan = _plan(df)
+        joins = [ln for ln in plan.splitlines() if "Join" in ln]
+        assert len(joins) == 1, plan
+        assert "BroadcastHashJoin" in joins[0] and "LeftSemi" in joins[0], plan
+
+
+def test_ann_similarity_precomputed_reads_vectors_once(spark, tmp_path):
+    """The neighbourhood sides rank ids and pivot distances only: of all
+    the scans, exactly one (the re-rank's) reads the vector column."""
+    from javascript_vector_database_spark.operators import knn
+
+    pre, _base, qv, pivots = _stored_index(spark, tmp_path)
+    plan = _plan(knn.ann_index_similarity(pre, qv, pivots, precomputed=True))
+    scans = [ln for ln in plan.splitlines() if "FileScan parquet" in ln]
+    assert len(scans) == 2, plan
+    assert sum("embedding" in ln.split("ReadSchema:")[1] for ln in scans) == 1, plan
